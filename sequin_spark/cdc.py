@@ -48,6 +48,16 @@ LSN_BASE = 1_000_000
 TXN_SIZE = 8
 
 
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(value: str) -> str:
+    """``value`` as a single-quoted Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def eventize(
     df: DataFrame,
     table_name: str,
@@ -86,30 +96,35 @@ def eventize(
     # the build path of 30+ registry queries; the Column-API version
     # measured 190-270 ms of py4j chatter per call vs ~40 ms parsed
     # (guide §1.2 applied to the driver).
+    # Names reach the SQL text quoted: identifiers in backticks (a
+    # backtick doubled), names used as values in string literals (quote
+    # and backslash escaped), so any column or table name parses to the
+    # same tree the Column API built.  order_expr is an SQL expression
+    # by contract and is interpolated as given.
     k = f"CAST(({order_expr}) AS BIGINT)"
     action = (f"CASE WHEN {k} % 10 <= 5 THEN 'insert' "
               f"WHEN {k} % 10 <= 8 THEN 'update' ELSE 'delete' END")
     record = "map(" + ", ".join(
-        f"'{c}', CAST(`{c}` AS STRING)" for c in df.columns) + ")"
+        f"{_sql_str(c)}, CAST({_sql_ident(c)} AS STRING)" for c in df.columns) + ")"
     pks = "array(" + ", ".join(
-        f"CAST(`{c}` AS STRING)" for c in pk_cols) + ")"
+        f"CAST({_sql_ident(c)} AS STRING)" for c in pk_cols) + ")"
     group_src = ("array(" + ", ".join(
-        f"CAST(`{c}` AS STRING)" for c in group_cols) + ")") if group_cols else pks
+        f"CAST({_sql_ident(c)} AS STRING)" for c in group_cols) + ")") if group_cols else pks
     lsn = f"CAST(({lsn_base} + FLOOR({k} / {txn_size})) AS BIGINT)"
     idx = f"CAST(({k} % {txn_size}) AS BIGINT)"
     if changed_col is not None:
-        changes = (f"CASE WHEN {action} = 'update' THEN map('{changed_col}', "
-                   f"concat('old:', CAST(`{changed_col}` AS STRING))) END")
+        changes = (f"CASE WHEN {action} = 'update' THEN map({_sql_str(changed_col)}, "
+                   f"concat('old:', CAST({_sql_ident(changed_col)} AS STRING))) END")
     else:
         changes = (f"CASE WHEN {action} = 'update' THEN "
                    f"CAST(map() AS MAP<STRING,STRING>) END")
-    ts = f"CAST(`{ts_col}` AS TIMESTAMP)" if ts_col else "CAST(NULL AS TIMESTAMP)"
+    ts = f"CAST({_sql_ident(ts_col)} AS TIMESTAMP)" if ts_col else "CAST(NULL AS TIMESTAMP)"
     out = df.selectExpr(
         f"{action} AS action",
         f"{record} AS record",
         f"{changes} AS changes",
-        f"'{table_schema}' AS table_schema",
-        f"'{table_name}' AS table_name",
+        f"{_sql_str(table_schema)} AS table_schema",
+        f"{_sql_str(table_name)} AS table_name",
         f"CAST({TABLE_OIDS.get(table_name, 0)} AS BIGINT) AS table_oid",
         f"{pks} AS record_pks",
         f"{lsn} AS commit_lsn",

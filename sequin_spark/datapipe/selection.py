@@ -264,7 +264,13 @@ def nb_quality_classifier(
     # nothing; the training sums become Σ cnt over the same token
     # multiset — identical integers, order-free.  The checkpoint is
     # ≤256 rows × ~24 B per doc, far smaller than the text it replaces
-    # a full re-tokenize of.
+    # a full re-tokenize of.  Caveat at scale: this table is
+    # corpus-proportional (O(n_docs × n_buckets) rows) and
+    # localCheckpoint blocks are executor-local, so losing an executor
+    # loses the blocks and fails the query instead of recomputing;
+    # acceptable for the bench contract, use persist(MEMORY_AND_DISK)
+    # where decommission resilience matters (same caveat as queries.py's
+    # _plan_ckpt of the distinct-txn table).
     per_doc = toks.groupBy(id_col, "is_hq", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
     ).localCheckpoint(eager=False)

@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 
 
@@ -270,11 +271,9 @@ class FileLogSink(Sink):
             self.deliver_frame = None
 
     def deliver(self, batch: SinkBatch) -> None:
-        import uuid as _uuid
-
         path = self.config["path"]
         os.makedirs(path, exist_ok=True)
-        fname = os.path.join(path, f"part-{os.getpid()}-{_uuid.uuid4().hex}.jsonl")
+        fname = os.path.join(path, f"part-{os.getpid()}-{uuid.uuid4().hex}.jsonl")
         with open(fname, "a") as f:
             for row in batch.rows:
                 f.write(json.dumps(row) + "\n")
@@ -282,7 +281,11 @@ class FileLogSink(Sink):
     def deliver_frame(self, pdf) -> None:
         path = self.config["path"]
         os.makedirs(path, exist_ok=True)
-        fname = os.path.join(path, f"part-{os.getpid()}-{int(time.time() * 1e6)}.jsonl")
+        # the uuid makes the name unique (a clock step can repeat a
+        # timestamp, and to_json would overwrite a delivered frame); the
+        # time prefix keeps one process's frames in write order by name
+        fname = os.path.join(
+            path, f"part-{os.getpid()}-{time.time_ns()}-{uuid.uuid4().hex}.jsonl")
         pdf.to_json(fname, orient="records", lines=True)
 
 

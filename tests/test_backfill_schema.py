@@ -3,7 +3,7 @@
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from sequin_spark.cdc import eventize_orders, load_table
+from sequin_spark.cdc import eventize, eventize_orders, load_table
 from sequin_spark.schema import EVENT_COLUMNS
 from sequin_spark.sources.backfill import (
     PageSizeOptimizer,
@@ -22,6 +22,22 @@ def test_eventize_schema(spark, sf_dir):
     assert row.group_id == row.record_pks[0]
     ins = ev.filter(F.col("action") == "insert").limit(1).collect()[0]
     assert ins.changes is None
+
+
+def test_eventize_quotes_interpolated_names(spark):
+    """Backticks and single quotes in column/table names reach the SQL
+    text escaped: identifiers resolve and names come back verbatim."""
+    df = spark.createDataFrame([(k, f"v{k}") for k in range(10)], ["a`b", "o'k"])
+    ev = eventize(df, "t'x\\y", ["a`b"], "`a``b`", table_schema="s'c",
+                  ts_col=None, changed_col="o'k", group_cols=["a`b", "o'k"])
+    rows = {r.record["a`b"]: r for r in ev.collect()}
+    assert len(rows) == 10
+    r6 = rows["6"]  # k % 10 == 6 → update
+    assert r6.action == "update"
+    assert r6.record == {"a`b": "6", "o'k": "v6"}
+    assert r6.changes == {"o'k": "old:v6"}
+    assert (r6.table_name, r6.table_schema) == ("t'x\\y", "s'c")
+    assert r6.record_pks == ["6"] and r6.group_id == "6:v6"
 
 
 def test_keyset_predicate_composite(spark):

@@ -141,3 +141,23 @@ def test_enrich_with_query(spark, sf_dir):
         F.col("enrichment").getField("cname").alias("cname"),
     ).collect()
     assert all(r.cname is not None and r.cname.isupper() for r in rows)
+
+
+def test_file_log_frames_never_overwrite_on_repeated_clock(tmp_path, monkeypatch):
+    """Two frames written while the clock reads the same instant (a clock
+    step back) land in two files; neither overwrites the other."""
+    import time
+
+    import pandas as pd
+
+    from sequin_spark.sinks.base import create_sink
+
+    monkeypatch.setattr(time, "time", lambda: 1_700_000_000.0)
+    monkeypatch.setattr(time, "time_ns", lambda: 1_700_000_000_000_000_000)
+    sink = create_sink("file_log", {"path": str(tmp_path)})
+    sink.deliver_frame(pd.DataFrame({"idempotency_key": ["a"], "v": [1]}))
+    sink.deliver_frame(pd.DataFrame({"idempotency_key": ["b"], "v": [2]}))
+    files = sorted(tmp_path.iterdir())
+    assert len(files) == 2
+    keys = sorted(json.loads(f.read_text())["idempotency_key"] for f in files)
+    assert keys == ["a", "b"]
